@@ -557,3 +557,23 @@ def test_jaccard_pairs_equals_bruteforce(spark, threshold_e6):
                 lo, hi = min(ida, idb), max(ida, idb)
                 want[(lo, hi)] = (inter, union, j_e6)
     assert got_set == want, (sorted(got_set), sorted(want))
+
+
+def test_jaccard_pairs_keeps_int64_ids_above_2_53(spark):
+    """Document ids past float64's integer range come back exactly: the
+    verify kernel's doc_b column must stay int64 across the Arrow
+    boundary (a null in it would make it float64, and 2^53 + 1 would
+    read as 2^53)."""
+    base = 2**53 + 1
+    docs = [(base, "abcabc"), (base + 1, "abcabc"), (base + 2, "abcabd"),
+            (base + 4, "zzzzzz")]
+    got = dedup.jaccard_pairs(
+        spark.createDataFrame(docs, "doc_id long, text string"),
+        n=3, threshold_e6=500_000,
+    ).collect()
+    # abcabc -> {abc, bca, cab}; abcabd -> {abc, bca, cab, abd}
+    assert sorted(tuple(r) for r in got) == [
+        (base, base + 1, 3, 3, 1_000_000),
+        (base, base + 2, 3, 4, 750_000),
+        (base + 1, base + 2, 3, 4, 750_000),
+    ]

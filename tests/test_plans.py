@@ -207,11 +207,14 @@ def test_ann_lsh_wire_tags_plan_the_declared_wire(spark):
     assert wplan.count("MapInPandas") >= 2  # bucket kernel + Arrow scorer
 
 
-def test_cosine_pairs_auto_routes_high_threshold_through_lsh(spark):
+def test_cosine_pairs_auto_routes_high_threshold_through_lsh(spark, caplog):
     """mode='auto' at near-dup thresholds (>= 0.9) must route through
     LSH candidates + exact verify: equi-joins on (table, bucket), no
     cartesian, no blocked explode fan-out, and — on planted near-dups —
-    output equal to the exact blocked path."""
+    output equal to the exact blocked path. The routing decision is
+    logged on the module logger."""
+    import logging
+
     from tiff_to_geojson_csv_json_format_converter_spark.operators import similarity
 
     rng = np.random.RandomState(7)
@@ -225,7 +228,9 @@ def test_cosine_pairs_auto_routes_high_threshold_through_lsh(spark):
         rows.append((1000 + j, (base / np.linalg.norm(base)).tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    routed = similarity.cosine_pairs(emb, threshold_e6=950_000, mode="auto")
+    with caplog.at_level(logging.INFO, logger=similarity.__name__):
+        routed = similarity.cosine_pairs(emb, threshold_e6=950_000, mode="auto")
+    assert "routed to LSH" in caplog.text
     p = plan_str(routed)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     assert "sequence(" not in p  # no blocked all-block replication fan-out
@@ -357,8 +362,8 @@ def test_cell_cover_join_is_equi_join(spark):
 
 
 def test_cell_cover_codegen_scorer_bit_equal_and_jvm_only(spark):
-    """The default 'codegen' PIP scorer must (a) plan NO Python
-    evaluation node — the Arrow kernel's per-worker constants made the
+    """The 'codegen' PIP scorer (not the default: 'arrow') must (a) plan NO
+    Python evaluation node — the Arrow kernel's per-worker constants made the
     join scale negatively 8->32 cores (BENCH/r06_diag_cell_cover.json)
     — and (b) agree bit-for-bit with the Arrow kernel AND the numpy
     reference, including hole polygons and an UNCLOSED ring (the wrap
@@ -508,6 +513,23 @@ def test_cell_cover_scorers_agree_on_schema_and_fail_loudly(spark):
         "array<array<array<double>>>"))
     with pytest.raises(Exception, match="null or mis-nested"):
         nul.filter(joins._pip_parity_pred("longitude", "latitude")).collect()
+
+
+def test_clip_points_refuses_reserved_barrier_column(spark):
+    """The literal clip's pushdown barrier column is reserved: an input
+    that already carries ``__pip_barrier`` raises instead of having its
+    column fed to the parity predicate and then dropped."""
+    sq = [[77.1, 28.1], [77.3, 28.1], [77.3, 28.3], [77.1, 28.3], [77.1, 28.1]]
+    pts = spark.createDataFrame(
+        [(1, 77.2, 28.2, "x")],
+        "point_id long, longitude double, latitude double, __pip_barrier string")
+    with pytest.raises(ValueError, match="__pip_barrier"):
+        joins.clip_points(pts, [sq])
+    with pytest.raises(ValueError, match="__pip_barrier"):
+        joins.clip_points_union(pts, [[sq]])
+    # without the column the same clip keeps the point
+    kept = joins.clip_points(pts.drop("__pip_barrier"), [sq]).collect()
+    assert [r["point_id"] for r in kept] == [1]
 
 
 def test_clip_fallback_ladder_rungs(spark):

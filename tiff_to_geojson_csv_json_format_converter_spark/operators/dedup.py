@@ -152,7 +152,11 @@ def _verify_jaccard_blocked(cand: DataFrame, sets_df: DataFrame,
         .withColumn("o", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
         .select(
             F.least("b", "o").alias("bi"), F.greatest("b", "o").alias("bj"),
-            "doc_a", F.lit(None).cast(id_t).alias("doc_b"), "blob",
+            # a non-null placeholder: one null would turn the whole
+            # int64 doc_b column float64 at the Arrow boundary, and
+            # pair ids above 2^53 with it (set rows are told apart by
+            # their non-null blob, never by doc_b)
+            "doc_a", F.lit(-1).cast(id_t).alias("doc_b"), "blob",
         )
     )
     out_schema = (f"doc_a {id_t}, doc_b {id_t}, n_inter long, "

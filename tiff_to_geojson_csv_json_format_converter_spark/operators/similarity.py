@@ -16,10 +16,14 @@
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def _exact_matmul(Q: np.ndarray, M: np.ndarray) -> np.ndarray:
@@ -244,14 +248,11 @@ def cosine_pairs(df: DataFrame, threshold_e6: int = 950_000, id_col: str = "vec_
     if mode not in ("auto", "broadcast", "blocked", "lsh"):
         raise ValueError(f"unknown mode {mode!r}")
     if mode == "auto" and threshold_e6 >= lsh_route_threshold_e6:
-        import warnings
-
-        warnings.warn(
-            "cosine_pairs(mode='auto') routed to LSH (threshold_e6="
-            f"{threshold_e6} >= {lsh_route_threshold_e6}): recall is "
-            "probabilistic (>=0.998 at 0.95 by the banding math), not "
-            "exhaustive. Pass mode='broadcast'/'blocked' for exact pairs.",
-            stacklevel=2,
+        log.info(
+            "cosine_pairs(mode='auto') routed to LSH (threshold_e6=%d >= %d): "
+            "recall is probabilistic (>=0.998 at 0.95 by the banding math), "
+            "not exhaustive. Pass mode='broadcast'/'blocked' for exact pairs.",
+            threshold_e6, lsh_route_threshold_e6,
         )
         mode = "lsh"
     if mode == "lsh":

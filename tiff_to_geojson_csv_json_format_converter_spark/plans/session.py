@@ -8,6 +8,16 @@ merely *also* works on local[N]:
 - Arrow on, large batches (the decode UDFs move pixels JVM<->Python in
   few large Arrow batches, not rows)
 - zstd parquet, 128 MB target file partitions
+- Python workers fork from :mod:`.pydaemon` (``spark.python.daemon.module``):
+  each Python task's setup calls ``importlib.invalidate_caches()``, which
+  before CPython 3.13 re-reads ``pyspark.zip``'s whole directory once per
+  zip importer, per task; the daemon backports 3.13's lazy invalidation
+  (re-read on the next lookup only). Unchanged: on Python >= 3.13 it
+  patches nothing, and files shipped with ``addPyFile`` are still
+  invalidated, so ones added after the first task import in later ones.
+  The package root joins the workers' ``PYTHONPATH`` (merged with a
+  caller's ``spark.executorEnv.PYTHONPATH``) so the daemon module imports
+  from any working directory.
 """
 
 from __future__ import annotations
@@ -17,6 +27,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def get_spark(
@@ -60,9 +71,12 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
+        "spark.python.daemon.module": __package__ + ".pydaemon",
     }
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
